@@ -61,7 +61,11 @@ object BronzeToSilver {
   * gold table: keep-list + na.drop, user/item raw copies, 16-column
   * frequency indexing (model persisted for the streaming job), cast
   * battery, load timestamps, plus the click==1 retrieval split. The two
-  * JDBC sinks (:166-172) activate when connection args are given. */
+  * JDBC sinks (:166-172) activate when connection args are given.
+  *
+  * Gold is computed once: the retrieval split and the JDBC sinks read the
+  * committed gold output back, so they neither re-run the pipeline nor
+  * re-take its load timestamps (a retrieval row equals its gold row). */
 object SilverToGold {
   def run(spark: SparkSession, silverDir: String, goldDir: String,
           modelDir: String, jdbc: Option[(String, String, String, String)] = None): Unit = {
@@ -70,10 +74,12 @@ object SilverToGold {
       Aliccp.goldRawCopy, Aliccp.goldIndexCols)
     gold.model.save(modelDir)
     Sources.writeParquet(gold.table, goldDir)
-    val retrieval = SilverGold.retrievalSplit(gold.table)
+    // the schema is known: reading it back needs no footer-inference job
+    val written = spark.read.schema(gold.table.schema).parquet(goldDir)
+    val retrieval = SilverGold.retrievalSplit(written)
     Sources.writeParquet(retrieval, s"$goldDir-retrieval")
     jdbc.foreach { case (url, table, user, password) =>
-      Sources.writeJdbc(gold.table, url, table, user, password)
+      Sources.writeJdbc(written, url, table, user, password)
       Sources.writeJdbc(retrieval, url, s"${table}retrieval", user, password)
     }
   }

@@ -11,9 +11,12 @@ import org.apache.spark.sql.functions._
   * (:132-152), and the click==1 retrieval split (:171).
   *
   * Differences by design: one single-pass fit instead of 16 serial
-  * estimator scans (SURVEY.md §4.2 #5); the pipeline is NOT re-executed per
-  * sink — callers cache `gold` before fanning out to multiple sinks
-  * (§4.2 #3).
+  * estimator scans (SURVEY.md §4.2 #5), and indexing by a broadcast map
+  * lookup instead of one join per column. `gold.table` is a plan whose
+  * load timestamps are taken when it runs: a caller with several sinks
+  * (graft.jobs.SilverToGold) writes it once and feeds the others from the
+  * written output, so the pipeline is not re-executed per sink (§4.2 #3)
+  * and every sink sees the same rows.
   */
 object SilverGold {
 

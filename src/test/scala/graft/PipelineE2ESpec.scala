@@ -46,7 +46,7 @@ class PipelineE2ESpec extends AnyFunSuite {
       index = Aliccp.goldIndexCols)
     assert(gold.table.count() === silverCount)
     assert(gold.table.columns.contains("user_id_raw"))
-    assert(gold.model.lookups.size === 16)
+    assert(gold.model.sizes.size === 16)
 
     val retrieval = SilverGold.retrievalSplit(gold.table)
     assert(retrieval.count() ===

@@ -2,6 +2,8 @@ package graft.jobs
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -59,8 +61,14 @@ class JobsSpec extends AnyFunSuite {
     assert(gold.columns.contains("user_id_raw") &&
       gold.columns.contains("created") && gold.columns.contains("datetime"))
     assert(gold.select("user_id_raw").head().getInt(0) === 42)
-    // retrieval split: the single gold row has click=1
-    assert(spark.read.parquet(s"$root/gold-retrieval").count() === 1)
+    // retrieval split: the single gold row has click=1, and every column of
+    // a retrieval row (load timestamps included) equals its gold row's
+    val retrieval = spark.read.parquet(s"$root/gold-retrieval")
+    assert(retrieval.count() === 1)
+    val clicked = gold.filter(col("click") === 1)
+    assert(retrieval.columns.toSeq === gold.columns.toSeq)
+    assert(retrieval.exceptAll(clicked).isEmpty && clicked.exceptAll(retrieval).isEmpty,
+      "retrieval rows differ from their gold rows")
 
     // stream transform applies the SAME persisted model (stream-batch
     // consistency): indices equal the batch gold table's
@@ -69,6 +77,49 @@ class JobsSpec extends AnyFunSuite {
       silver.na.drop(), model)
     assert(streamed.select("user_id").head().getInt(0) ===
       gold.select("user_id").head().getInt(0))
+  }
+
+  /** Silver written by BronzeToSilver from the CSV fixtures. */
+  private def silverFixture(): String = {
+    val root = Files.createTempDirectory("jobs").toString
+    val (sk, cm) = writeFixtures(root)
+    BronzeToSilver.run(spark, sk, cm, s"$root/silver")
+    root
+  }
+
+  test("SilverToGold leaves nothing cached") {
+    val root = silverFixture()
+    spark.catalog.clearCache()
+    SilverToGold.run(spark, s"$root/silver", s"$root/gold", s"$root/model")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "SilverToGold.run left a cached plan behind")
+  }
+
+  test("SilverToGold runs a fixed number of Spark jobs") {
+    // 10 jobs measured on this fixture, the same count as on 30k generated
+    // rows (59 before the broadcast-vocabulary transform, the one-job save
+    // and the read-back retrieval split); the margin of 2 leaves room for
+    // an AQE stage split, not for a job per indexed column
+    val budget = 10 + 2
+    val root = silverFixture()
+    val sc = spark.sparkContext
+    val group = "silver-to-gold-job-budget"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job budget")
+      try SilverToGold.run(spark, s"$root/silver", s"$root/gold", s"$root/model")
+      finally sc.clearJobGroup()
+      BusDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get() > 0 && jobs.get() <= budget,
+      s"SilverToGold.run ran ${jobs.get()} Spark jobs, budget $budget")
   }
 
   test("CorpusClean filters, exact-dedups and collapses near-dup groups") {
